@@ -162,13 +162,6 @@ object Manifest {
     * file is marked overflow and never pruned out. */
   val ValuesCap: Int = 64
 
-  /** One-pass write stats (default true): collect per-file manifest
-    * stats during the batch write instead of a full read-back of the
-    * just-written files. `false` restores the read-back pass — kept as
-    * the parity oracle for the spec and as an operational escape
-    * hatch. */
-  val WriteInlineStatsKey = "graft.write.inlineStats"
-
   /** Bloom filter geometry: m bits per file per column, k seeded
     * hashes. 32 Ki bits = 4 KiB/file/col — ~1% false positives at
     * ~3.3k distinct values per file, saturated-but-sound (no false
@@ -200,9 +193,6 @@ object Manifest {
     * closure. Conf-tunable for tests. */
   val AppendMaxChainKey = "graft.manifest.append.maxChain"
   private val AppendMaxChainDefault = 64L
-  /** Escape hatch: `false` forces every append through the compacting
-    * path (the pre-linked-manifest layout). */
-  val AppendLinkedKey = "graft.manifest.append.linked"
   /** Cumulative-remove bound for a linked commit: the chain's base
     * file carries every path removed along it (read once per
     * listing), so once the set stops being small — a steady partition
@@ -687,13 +677,15 @@ object Manifest {
 
   /** The committed snapshot of `dir` at version `v` (or latest) — the
     * planner-integration entry point ([[graft.plans.ManifestFileIndex]]
-    * builds its file listing and pruning state from it). */
+    * builds its file listing and pruning state from it): the memoized
+    * header ([[snapshotMeta]]: pointer, chain, size, configuration)
+    * plus the live entries ([[liveEntries]]). */
   private[graft] def loadSnapshot(spark: SparkSession, dir: String,
                                   v: Option[Long] = None): Snapshot = {
-    val (_, root) = fsOf(spark, dir)
-    val ver = v.orElse(latestVersion(spark, dir))
-      .getOrElse(throw new IllegalArgumentException(s"no table at $dir"))
-    readSnapshot(spark, root, ver)
+    val meta = snapshotMeta(spark, dir, v)
+    Snapshot(liveEntries(spark, meta), meta.ddl, meta.statsCols,
+      meta.bloomCols, meta.dvDirs, meta.constraints,
+      new Path(meta.manifestDirs.last).getName, meta.colMap)
   }
 
   /** Every manifest leads with a schema SENTINEL entry (`path = ""`, no
@@ -938,8 +930,8 @@ object Manifest {
     * few-KB manifest costs a whole Spark job (several under AQE) per
     * snapshot resolution, and one lifecycle resolves snapshots dozens
     * of times. Gated by the SAME budget as planning venue choice
-    * ([[graft.plans.ManifestScan.DistributedMinBytesKey]]); above it
-    * callers stay on the distributed chokepoint. Decoding mirrors
+    * ([[graft.plans.ManifestScan.DistributedMinBytesKey]]); at or above
+    * it [[liveEntries]] takes the distributed chokepoint. Decoding mirrors
     * [[paddedManifest]]'s forward-compat contract exactly: a column
     * missing from an old manifest's physical schema pads with its
     * neutral default ("" / 0 / false / empty list); chain removes are
@@ -1022,27 +1014,12 @@ object Manifest {
     out.result()
   }
 
-  private def readSnapshot(spark: SparkSession, root: Path,
-                           v: Long): Snapshot = {
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lines = readPointerLines(fs, root, v)
-    // a pending multi-commit pointer is not a committed version: time
-    // travel to it would read a snapshot that never happened
-    require(pointerVisible(fs, lines),
-      s"version $v at $root is a pending multi-table commit, not committed")
-    readSnapshotByName(spark, root, lines.head.trim)
-  }
-
   /** FORWARD-COMPATIBLE manifest relation: a manifest written before a
     * [[ManifestEntry]] field existed simply lacks that column, so it is
     * backfilled with the field's neutral default (empty list / "" / 0 /
     * false) instead of failing `.as[Entry]` resolution — old tables and
     * their time-travel versions stay readable across library upgrades,
     * the same contract a table FORMAT owes its files. */
-  private def paddedManifest(spark: SparkSession,
-                             manifestDir: String): DataFrame =
-    paddedManifest(spark, Seq(manifestDir), Nil)
-
   private def paddedManifest(spark: SparkSession,
                              manifestDirs: Seq[String],
                              removedPaths: Seq[String]): DataFrame = {
@@ -1152,33 +1129,6 @@ object Manifest {
     manifestChain(fs, root, name)
       .map(n => new Path(new Path(root, ManifestsDir), n).toString)
 
-  private def readSnapshotByName(spark: SparkSession, root: Path,
-                                 name: String): Snapshot = {
-    import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    val st = chainState(fs, root, name)
-    val dirs = st.names
-      .map(n => new Path(new Path(root, ManifestsDir), n).toString)
-    // venue switch, same budget as planning: below it the chain decodes
-    // driver-side with zero Spark jobs; above it the distributed
-    // chokepoint collects (its driver heap argument is unchanged)
-    val bytes = dirs.map(d => fs.listStatus(new Path(d))
-      .filter(_.isFile).map(_.getLen).sum).sum
-    val all: Seq[Entry] =
-      if (bytes < localReadBudget(spark))
-        readEntriesLocalParquet(conf, dirs, st.removedPaths)
-      else paddedManifest(spark, dirs, st.removedPaths)
-        .as[Entry].collect().toSeq
-    val sentinel = all.find(e => e.path.isEmpty && e.schema_ddl.nonEmpty)
-      .getOrElse(throw new IllegalStateException(
-        s"manifest $name has no schema sentinel"))
-    Snapshot(all.filter(_.path.nonEmpty), sentinel.schema_ddl,
-      sentinel.stat_cols, sentinel.bloom_cols,
-      sentinel.dv_dirs ++ st.dvDirs, sentinel.constraints, name,
-      colMap = if (st.colMap.nonEmpty) st.colMap else sentinel.values)
-  }
-
   /** Lightweight snapshot HEADER: the sentinel's configuration plus
     * the manifest chain's locations and on-disk size — everything
     * planning needs to decide HOW to plan, without collecting a single
@@ -1239,6 +1189,17 @@ object Manifest {
           size() > 64
       })
 
+  /** Chain-ROOT sentinels by manifest dir, memoized on the same
+    * immutability argument: a linked commit keeps its parent's root, so
+    * the header of a NEW tip re-reads only its pointer, base file and
+    * listing — never the root's sentinel again. */
+  private val rootSentinelCache =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[String, Entry](64, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[String, Entry]): Boolean = size() > 64
+      })
+
   private[graft] def snapshotMeta(spark: SparkSession, dir: String,
                                   v: Option[Long] = None): SnapshotMeta = {
     import spark.implicits._
@@ -1246,6 +1207,8 @@ object Manifest {
     val ver = v.orElse(latestVersion(spark, dir))
       .getOrElse(throw new IllegalArgumentException(s"no table at $dir"))
     val lines = readPointerLines(fs, root, ver)
+    // a pending multi-commit pointer is not a committed version: time
+    // travel to it would read a snapshot that never happened
     require(pointerVisible(fs, lines),
       s"version $ver at $root is a pending multi-table commit, not committed")
     val name = lines.head.trim
@@ -1259,11 +1222,16 @@ object Manifest {
       .filter(_.isFile).map(_.getLen).sum).sum
     // sentinel from the chain ROOT's JSON sidecar (zero Spark jobs);
     // older manifests without one fall back to the parquet row
-    val sentinel = readSentinelFile(fs,
-      new Path(new Path(root, ManifestsDir), st.names.head))
-      .getOrElse(paddedManifest(spark, dirs, Nil)
-        .filter(col("path") === "" && col("schema_ddl") =!= "")
-        .as[Entry].head())
+    val sentinel = Option(rootSentinelCache.get(dirs.head)).getOrElse {
+      val s = readSentinelFile(fs, new Path(dirs.head))
+        .getOrElse(paddedManifest(spark, dirs, Nil)
+          .filter(col("path") === "" && col("schema_ddl") =!= "")
+          .as[Entry].take(1).headOption
+          .getOrElse(throw new IllegalStateException(
+            s"manifest ${st.names.head} has no schema sentinel")))
+      rootSentinelCache.put(dirs.head, s)
+      s
+    }
     val meta = SnapshotMeta(sentinel.schema_ddl, sentinel.stat_cols,
       sentinel.bloom_cols, sentinel.dv_dirs ++ st.dvDirs,
       sentinel.constraints, dirs, st.removedPaths, st.dvDirs, bytes, ver,
@@ -1280,12 +1248,29 @@ object Manifest {
     * materializing O(entries) [[ManifestEntry]] objects on the
     * driver. */
   private[graft] def entriesDataset(spark: SparkSession,
-                                    meta: SnapshotMeta)
+                                    meta: SnapshotMeta,
+                                    extraRemoves: Seq[String] = Nil)
       : org.apache.spark.sql.Dataset[ManifestEntry] = {
     import spark.implicits._
-    paddedManifest(spark, meta.manifestDirs, meta.removedPaths)
+    paddedManifest(spark, meta.manifestDirs,
+      meta.removedPaths ++ extraRemoves)
       .filter(col("path") =!= "").as[ManifestEntry]
   }
+
+  /** The snapshot's live file entries on the driver (sentinel dropped,
+    * the chain's removes and `extraRemoves` subtracted) — the ONE venue
+    * rule for driver-side entry reads: below [[localReadBudget]] the
+    * chain decodes driver-local with zero Spark jobs
+    * ([[readEntriesLocalParquet]]); at or past it the distributed
+    * chokepoint collects ([[entriesDataset]]). */
+  private[graft] def liveEntries(spark: SparkSession, meta: SnapshotMeta,
+                                 extraRemoves: Seq[String] = Nil)
+      : Seq[Entry] =
+    if (meta.manifestBytes < localReadBudget(spark))
+      readEntriesLocalParquet(spark.sparkContext.hadoopConfiguration,
+        meta.manifestDirs, meta.removedPaths ++ extraRemoves)
+        .filter(_.path.nonEmpty)
+    else entriesDataset(spark, meta, extraRemoves).collect().toSeq
 
   /** Write-amplification ledger for one snapshot transition:
     * `carried*` counts files present in BOTH versions (carried by
@@ -1638,9 +1623,10 @@ object Manifest {
   /** Write `df` as a fresh immutable batch and return its entries.
     * Rows are clustered by the partition column so per-file value sets
     * stay tight (one shuffle — the price of pruning on every later
-    * rewrite); stats — partition-value sets plus min/max per stat
-    * column — come from one read-back of the batch (a projection of
-    * only the needed columns), never from path names.
+    * rewrite); stats — partition-value sets, row counts, min/max per
+    * stat column, bloom bits and CHECK-violation counts — are collected
+    * by a write-job stats tracker in the same pass that writes the
+    * files, never from path names or a read-back.
     *
     * `numFiles` (compaction's bin-packing knob) additionally spreads
     * rows WITHIN a partition value by a content-derived salt: plain
@@ -1670,34 +1656,26 @@ object Manifest {
         pmod(xxhash64(df.columns.map(col).toIndexedSeq: _*), lit(n.toLong)))
       case (None, None) => df.repartition(col(partitionCol))
     }
-    // ---- ONE-PASS write + stats (default): the per-file stats are
-    // collected DURING the write through a WriteJobStatsTracker (the
-    // Delta-log mechanism) instead of a second full read of every byte
-    // just written. The probe expressions are built through the
-    // ordinary Column API against a dummy frame, so the analyzer
-    // resolves casts / session timezone / eval mode EXACTLY as the
-    // read-back aggregation did, then bind to row ordinals; min/max
+    // ---- ONE-PASS write + stats: the per-file stats are collected
+    // DURING the write through a WriteJobStatsTracker (the Delta-log
+    // mechanism) instead of a second full read of every byte just
+    // written. The probe expressions are built through the ordinary
+    // Column API against a dummy frame, so the analyzer resolves casts /
+    // session timezone / eval mode exactly as a DataFrame aggregation
+    // over the written files would, then bind to row ordinals; min/max
     // accumulate on raw values under the same interpreted ordering the
-    // Min/Max aggregates use and render through the same Cast. The
-    // read-back pass survives behind [[WriteInlineStatsKey]]=false as
-    // the parity oracle (ManifestWriteStatsSpec compares the two).
+    // Min/Max aggregates use and render through the same Cast
+    // (ManifestWriteStatsSpec recomputes every field with that
+    // aggregation and asserts equality).
     val parsed = constraints.map(parseConstraint)
-    val inline = spark.sparkContext.hadoopConfiguration
-      .getBoolean(WriteInlineStatsKey, true)
-    val trackerOpt =
-      if (!inline) None
-      else Some(new org.apache.spark.sql.GraftWriteBridge
-        .GraftBatchStatsTracker(
-          boundProbeExprs(spark, df.schema, partitionCol, statsCols,
-            bloomCols, parsed),
-          statsCols.map(c => df.schema(c).dataType),
-          bloomCols.size, BloomHashes, BloomBits, parsed.size, ValuesCap))
-    trackerOpt match {
-      case Some(tracker) =>
-        org.apache.spark.sql.GraftWriteBridge.writeParquet(
-          spark, clustered, batchDir.toString, Seq(tracker))
-      case None => clustered.write.parquet(batchDir.toString)
-    }
+    val tracker = new org.apache.spark.sql.GraftWriteBridge
+      .GraftBatchStatsTracker(
+        boundProbeExprs(spark, df.schema, partitionCol, statsCols,
+          bloomCols, parsed),
+        statsCols.map(c => df.schema(c).dataType),
+        bloomCols.size, BloomHashes, BloomBits, parsed.size, ValuesCap)
+    org.apache.spark.sql.GraftWriteBridge.writeParquet(
+      spark, clustered, batchDir.toString, Seq(tracker))
     // one LIST of the batch dir serves both the empty-write guard and
     // every entry's byte size (a per-entry getFileStatus is O(files)
     // driver RPCs). An all-empty batch (a merge that nets to nothing,
@@ -1710,122 +1688,18 @@ object Manifest {
         !st.getPath.getName.startsWith("."))
       .map(st => st.getPath.getName -> st.getLen).toMap
     if (partLen.isEmpty) { fs.delete(batchDir, true); return Seq.empty }
-    val ddl = nullableDdl(df.schema)
-
-    trackerOpt.foreach { tracker =>
-      return entriesFromTracker(spark, fs, batchDir, tracker.results, df,
-        partitionCol, statsCols, bloomCols, parsed, partLen, ddl)
-    }
-    val rootUri = batchDir.toUri.getPath // file-scheme-free for relativizing
-    // TIMESTAMP stats are stored as epoch-micros strings, NOT the
-    // session-timezone cast-to-string rendering: a reader session with
-    // a different spark.sql.session.timeZone would otherwise compare
-    // its literals against another zone's wall-clock strings and prune
-    // files that contain matching rows. Micros are zone-free; the
-    // probe side converts its literals the same way (renderedTs).
-    def statRender(agg: org.apache.spark.sql.Column, c: String) =
-      df.schema(c).dataType match {
-        case TimestampType => unix_micros(agg).cast("string")
-        case _ => agg.cast("string")
-      }
-    val statMins = statsCols.map(c => statRender(min(col(c)), c))
-    val statMaxs = statsCols.map(c => statRender(max(col(c)), c))
-    val statAggs =
-      if (statsCols.isEmpty)
-        Seq(typedLit(Seq.empty[String]).as("stat_mins"),
-          typedLit(Seq.empty[String]).as("stat_maxs"))
-      else Seq(array(statMins: _*).as("stat_mins"),
-        array(statMaxs: _*).as("stat_maxs"))
-    // per-file bloom bit positions (k seeded hashes per value), set-
-    // collected in the SAME read-back pass as the other stats; each set
-    // is bounded by BloomBits, so driver memory stays O(batch files)
-    val bloomAggs = bloomCols.flatMap(c => (0 until BloomHashes).map(i =>
-      collect_set(when(col(c).isNotNull, bloomPosition(col(c), i)))
-        .as(s"bloom_${c}_$i")))
-    // CHECK constraints ride the SAME read-back pass (zero extra
-    // scans): SQL-standard semantics — a row violates when the
-    // expression is FALSE, null/UNKNOWN passes
-    val violAggs = parsed.zipWithIndex.map { case ((_, sql), i) =>
-      sum(when(!coalesce(expr(sql), lit(true)), 1L).otherwise(0L))
-        .as(s"viol_$i")
-    }
-    val aggList = Seq(
-      slice(sort_array(collect_set(col(partitionCol).cast("string"))),
-        1, ValuesCap + 1).as("values"),
-      max(col(partitionCol).isNull.cast("int")).as("has_null"),
-      count(lit(1)).as("rows")) ++ statAggs ++ bloomAggs ++ violAggs
-    val stats = spark.read
-      .schema(DataType.fromDDL(ddl).asInstanceOf[StructType])
-      .parquet(batchDir.toString)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggList.head, aggList.tail: _*)
-      .collect()
-    // rows can be zero with part files present (a single empty part
-    // from a coalesced empty shuffle): same empty-batch contract
-    if (stats.isEmpty) { fs.delete(batchDir, true); return Seq.empty }
-    parsed.zipWithIndex.foreach { case ((name, sql), i) =>
-      val viol = stats.map(_.getAs[Long](s"viol_$i")).sum
-      // throwing here aborts BEFORE any manifest/pointer exists: the
-      // staged batch is orphan garbage, the table is untouched
-      if (viol > 0) throw ConstraintViolationException(name, sql, viol)
-    }
-    def relOf(r: org.apache.spark.sql.Row): String = {
-      val fileUri = new Path(r.getString(0)).toUri.getPath
-      require(fileUri.startsWith(rootUri), s"unexpected file path $fileUri")
-      s"$DataDir/${batchDir.getName}${fileUri.stripPrefix(rootUri)}"
-    }
-    if (bloomCols.nonEmpty) {
-      val bloomRows = stats.flatMap { r =>
-        val rel = relOf(r)
-        bloomCols.zipWithIndex.map { case (c, ci) =>
-          val bits = new java.util.BitSet(BloomBits)
-          (0 until BloomHashes).foreach { i =>
-            r.getSeq[Long](6 + ci * BloomHashes + i)
-              .foreach(p => bits.set(p.toInt))
-          }
-          val words = bits.toLongArray
-          BloomEntry(rel, c,
-            words.toSeq.padTo(BloomBits / 64, 0L))
-        }
-      }.toSeq
-      // driver-resident rows (O(batch files)): single-part local write,
-      // no Spark job — same rationale as [[writeEntriesLocal]]
-      val bEnc = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
-        org.apache.spark.sql.Encoders.product[BloomEntry]
-          .asInstanceOf[org.apache.spark.sql.catalyst.encoders
-            .AgnosticEncoder[BloomEntry]])
-      val bSer = bEnc.createSerializer()
-      val bDir = new Path(batchDir, BloomDir)
-      fs.mkdirs(bDir)
-      org.apache.spark.sql.GraftParquetBridge.writeLocalParquet(
-        spark, bEnc.schema,
-        bloomRows.iterator.map(bSer(_)),
-        new Path(bDir, s"part-00000-${UUID.randomUUID()}.parquet").toString)
-    }
-    stats.map { r =>
-      val rel = relOf(r)
-      val vals = r.getSeq[String](1)
-      ManifestEntry(rel,
-        values = vals.take(ValuesCap),
-        has_null = r.getInt(2) == 1,
-        overflow = vals.length > ValuesCap,
-        rows = r.getLong(3),
-        bytes = partLen(rel.substring(rel.lastIndexOf('/') + 1)),
-        schema_ddl = ddl, // stripped to the sentinel by writeManifest
-        stat_cols = Seq.empty,
-        stat_mins = r.getSeq[String](4),
-        stat_maxs = r.getSeq[String](5),
-        bloom_cols = Seq.empty)
-    }.toSeq
+    entriesFromTracker(spark, fs, batchDir, tracker.results, df,
+      partitionCol, statsCols, bloomCols, parsed, partLen,
+      nullableDdl(df.schema))
   }
 
   /** Probe expressions for the one-pass write stats, in the layout
     * [[org.apache.spark.sql.GraftWriteBridge.GraftBatchStatsTracker]]
     * expects: partition value cast to string, raw stat columns,
     * nullable bloom bit positions, constraint-violation indicators —
-    * analyzer-resolved over a dummy frame (same casts/timezone/eval
-    * mode as the former read-back aggregation), bound to schema
-    * ordinals. */
+    * analyzer-resolved over a dummy frame (the casts/timezone/eval
+    * mode a DataFrame aggregation over the batch would get), bound to
+    * schema ordinals. */
   private def boundProbeExprs(spark: SparkSession, schema: StructType,
                               partitionCol: String, statsCols: Seq[String],
                               bloomCols: Seq[String],
@@ -1861,10 +1735,14 @@ object Manifest {
     })
   }
 
-  /** Render one raw min/max value the way the read-back aggregation
-    * did: TIMESTAMP as its zone-free epoch-micros string
-    * (`unix_micros(...).cast("string")`), everything else through the
-    * same session-configured `Cast` to string. */
+  /** Render one raw min/max value as the manifest stores it: TIMESTAMP
+    * as its zone-free epoch-micros string (`unix_micros(...)
+    * .cast("string")`), everything else through the session-configured
+    * `Cast` to string. Micros, not the session-timezone rendering: a
+    * reader session with a different spark.sql.session.timeZone would
+    * otherwise compare its literals against another zone's wall-clock
+    * strings and prune files that contain matching rows; the probe side
+    * converts its literals the same way. */
   private def renderStatValue(v: Any, dt: DataType, tz: String): String =
     if (v == null) null
     else dt match {
@@ -1877,8 +1755,9 @@ object Manifest {
     }
 
   /** Assemble [[ManifestEntry]]s (+ the bloom sidecar, + the
-    * constraint gate) from the one-pass tracker results — the exact
-    * counterpart of the legacy read-back assembly. */
+    * constraint gate) from the one-pass tracker results. A violation
+    * throws BEFORE any manifest/pointer exists: the staged batch is
+    * orphan garbage, the table is untouched. */
   private def entriesFromTracker(spark: SparkSession, fs: FileSystem,
                                  batchDir: Path,
                                  fileStats: Seq[org.apache.spark.sql
@@ -2817,15 +2696,13 @@ object Manifest {
     * vectorized reader + parallelism is faster at any scale. Measured:
     * a 128 MB-budget gate regressed man_upsert_mor 2.83→3.08 s at sf0.1
     * (its 80-220 KB vectors decode ~0.2 s serial). */
-  private[graft] val DvLocalMaxBytesKey = "graft.dv.localMaxBytes"
-  private val DvLocalMaxBytesDefault = 64L << 10
+  private val DvLocalMaxBytes = 64L << 10
 
   private def dvLocalEntries(spark: SparkSession, root: Path,
                              dvDirs: Seq[String]): Option[Seq[DvEntry]] =
     try {
       val conf = spark.sparkContext.hadoopConfiguration
-      val budget = math.min(localReadBudget(spark),
-        conf.getLong(DvLocalMaxBytesKey, DvLocalMaxBytesDefault))
+      val budget = math.min(localReadBudget(spark), DvLocalMaxBytes)
       if (budget < 0L) None // pinned distributed
       else {
         val fs = root.getFileSystem(conf)
@@ -3846,20 +3723,18 @@ object Manifest {
   }
 
   /** A LINKED append writes only the batch's entries plus a base
-    * pointer — O(batch), not O(table). Eligible when (a) linking is on
-    * ([[AppendLinkedKey]]); (b) the chain has headroom
-    * ([[AppendMaxChainKey]] — at the cap the append compacts, which
-    * re-roots the chain); and (c) the parent chain's PHYSICAL parquet
-    * schema matches this writer's [[ManifestEntry]] encoder exactly —
-    * a chain must read as ONE uniform relation, and mixing an
+    * pointer — O(batch), not O(table). Eligible when (a) the chain has
+    * headroom ([[AppendMaxChainKey]] — at the cap the append compacts,
+    * which re-roots the chain); and (b) the parent chain's PHYSICAL
+    * parquet schema matches this writer's [[ManifestEntry]] encoder
+    * exactly — a chain must read as ONE uniform relation, and mixing an
     * old-library manifest (missing a column) with a new part would
     * leave schema inference to whichever footer Spark samples. Guard
-    * (c) reads one footer; all links passed it inductively at their
+    * (b) reads one footer; all links passed it inductively at their
     * own write, so checking the chain ROOT covers the chain. */
   private def linkedAppendEligible(spark: SparkSession, fs: FileSystem,
                                    meta: SnapshotMeta): Boolean = {
     val conf = spark.sparkContext.hadoopConfiguration
-    if (!conf.getBoolean(AppendLinkedKey, true)) return false
     if (meta.manifestDirs.length >=
       conf.getLong(AppendMaxChainKey, AppendMaxChainDefault)) return false
     val want = org.apache.spark.sql.Encoders.product[ManifestEntry].schema
@@ -3963,39 +3838,23 @@ object Manifest {
       constraints = Seq.empty))
     val nFiles = math.max(1L,
       meta.manifestBytes / ManifestTargetBytes).toInt
-    // LOCAL venue for tiny chains (round-17 carry-item 5): when the
-    // parent chain sits under both the driver-read budget and the
-    // single-part size target, the carried-entry union is a few-KB
-    // driver list — decode it locally (same padding + remove
-    // subtraction as the distributed reader) and write the one part
-    // through writeEntriesLocal, zero Spark jobs. Past either bound
-    // the distributed chokepoint below is untouched (its sizing and
-    // heap arguments unchanged). nFiles == 1 in this branch by
-    // construction, so the on-disk shape matches what the distributed
-    // path would have written.
-    if (meta.manifestBytes <
-        math.min(localReadBudget(spark), ManifestTargetBytes)) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = root.getFileSystem(conf)
-      val carriedLocal = readEntriesLocalParquet(conf,
-        meta.manifestDirs, meta.removedPaths ++ removes)
-        .filter(_.path.nonEmpty)
+    // WRITE venue: a parent chain under the single-part size target
+    // re-roots as ONE part written driver-side (writeEntriesLocal, no
+    // write job) from the carried entries [[liveEntries]] reads in its
+    // own venue; nFiles == 1 here by construction, so the on-disk shape
+    // matches what the distributed write would have produced. Past the
+    // target the carried entries flow executor-to-executor. Either way
+    // this commit's own removes ride the same subtraction as the
+    // chain's accumulated ones.
+    if (meta.manifestBytes < ManifestTargetBytes)
       writeEntriesLocal(spark, new Path(dir),
-        (sentinel +: slim) ++ carriedLocal)
-      writeSentinelFile(fs, new Path(dir), sentinel)
-    } else {
-    // this commit's own removes ride the same chokepoint subtraction
-    // the chain reader uses (entriesDataset already subtracts the
-    // CHAIN's accumulated removes)
-    val carried =
-      if (removes.isEmpty) entriesDataset(spark, meta).toDF()
-      else paddedManifest(spark, meta.manifestDirs,
-        meta.removedPaths ++ removes).filter(col("path") =!= "")
-    (sentinel +: slim).toDF().unionByName(carried)
-      .coalesce(nFiles).write.parquet(dir)
+        (sentinel +: slim) ++ liveEntries(spark, meta, removes))
+    else
+      (sentinel +: slim).toDF()
+        .unionByName(entriesDataset(spark, meta, removes).toDF())
+        .coalesce(nFiles).write.parquet(dir)
     writeSentinelFile(root.getFileSystem(
       spark.sparkContext.hadoopConfiguration), new Path(dir), sentinel)
-    }
     val tip = new Path(meta.manifestDirs.last).getName
     val estEntries = math.max(1L, meta.manifestBytes / 64)
     if (writeSidecar &&
@@ -6454,22 +6313,18 @@ object Manifest {
   private def partitionCandidates(spark: SparkSession, meta: SnapshotMeta,
                                   partitionCol: String, wanted: Set[String],
                                   wantNull: Boolean): Seq[Entry] = {
-    // driver-local venue under the planning budget (zero Spark jobs);
-    // the predicate is the same either way
-    if (meta.manifestBytes < localReadBudget(spark)) {
-      val live = readEntriesLocalParquet(
-        spark.sparkContext.hadoopConfiguration, meta.manifestDirs,
-        meta.removedPaths).filter(_.path.nonEmpty)
-      if (partitionValuesSafe(meta.ddl, partitionCol))
-        live.filter(e => e.overflow || e.values.exists(wanted.contains) ||
-          (wantNull && e.has_null))
-      else live
-    } else if (partitionValuesSafe(meta.ddl, partitionCol)) {
-      val cond = col("overflow") ||
+    val safe = partitionValuesSafe(meta.ddl, partitionCol)
+    // past the driver budget the predicate runs where the entries live,
+    // so only candidates reach the driver; otherwise [[liveEntries]]
+    // reads in its own venue and the same predicate filters locally
+    if (safe && meta.manifestBytes >= localReadBudget(spark))
+      entriesDataset(spark, meta).filter(col("overflow") ||
         arrays_overlap(col("values"), typedLit(wanted.toSeq)) ||
-        (if (wantNull) col("has_null") else lit(false))
-      entriesDataset(spark, meta).filter(cond).collect().toSeq
-    } else entriesDataset(spark, meta).collect().toSeq
+        (if (wantNull) col("has_null") else lit(false))).collect().toSeq
+    else if (safe)
+      liveEntries(spark, meta).filter(e => e.overflow ||
+        e.values.exists(wanted.contains) || (wantNull && e.has_null))
+    else liveEntries(spark, meta)
   }
 
   /** OPTIMIZE: rewrite the snapshot's small files (< `smallBytes`) into
@@ -7130,7 +6985,7 @@ object Manifest {
           (a1 + c1, a2 + c2)
         }
       // effective DV set = base sentinel's ++ chain-attached, exactly
-      // [[readSnapshotByName]]'s composition
+      // [[snapshotMeta]]'s composition
       val (sentDv, sentC) = sentinels.getOrElse(st.names.head, (0L, 0L))
       (v, f - st.removedPaths.size, r - rmR, b - rmB,
         sentDv + st.dvDirs.size, sentC, txn)
